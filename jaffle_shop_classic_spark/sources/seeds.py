@@ -3,7 +3,8 @@
 Reads headered CSVs with pinned schemas and materializes them as
 Parquet-backed tables (columnar from the first hop; at scale the CSV ->
 Parquet rewrite is the shuffle-free parallel ingest path), then
-registers temp views so downstream models resolve them by name.
+registers temp views so downstream models resolve them by name. The
+seeds are independent, so their loads run as concurrent Spark jobs.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import SEED_SCHEMAS
+from ..session import run_concurrently
 
 # The reference project's seed CSVs (read-only); override per-project.
 DEFAULT_SEED_DIR = os.environ.get("JAFFLE_SEED_DIR", "/root/reference/seeds")
@@ -44,6 +46,7 @@ def load_seeds(
     seed_dir: str = DEFAULT_SEED_DIR,
     warehouse_dir: str | None = None,
 ) -> dict[str, DataFrame]:
-    return {
-        name: load_seed(spark, name, seed_dir, warehouse_dir) for name in SEED_SCHEMAS
-    }
+    dfs = run_concurrently(
+        spark, lambda name: load_seed(spark, name, seed_dir, warehouse_dir), SEED_SCHEMAS
+    )
+    return dict(zip(SEED_SCHEMAS, dfs))

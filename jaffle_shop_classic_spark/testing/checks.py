@@ -12,6 +12,12 @@ All four compile to single-shuffle (or shuffle-free) plans:
   accepted_values   -> scan-level filter
   relationships     -> LEFT ANTI equi-join (broadcast when parent small)
 so they run at data scale, not driver scale.
+
+At the reference's size each check is a small job bound by per-job
+latency (planning, scheduling, result fetch) rather than by the cores,
+so ``run_checks`` submits all checks together as concurrent Spark jobs.
+Each check still runs its own ``limit(k+1)`` collect, plus a ``count()``
+only when the sample overflows; results keep the input order.
 """
 
 from __future__ import annotations
@@ -21,6 +27,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 
 def unique(df: DataFrame, column: str) -> DataFrame:
@@ -128,17 +136,23 @@ class CheckResult:
         return f"{self.name}: {status}"
 
 
+def _check(name: str, viol: DataFrame, sample_rows: int) -> CheckResult:
+    rows = viol.limit(sample_rows + 1).collect()
+    if not rows:
+        return CheckResult(name, True, 0)
+    # the sample already proves the exact count unless it overflowed —
+    # only then re-run the plan for the total
+    n = len(rows) if len(rows) <= sample_rows else viol.count()
+    return CheckResult(name, False, n, [r.asDict() for r in rows[:sample_rows]])
+
+
 def run_checks(checks: dict[str, DataFrame], sample_rows: int = 5) -> list[CheckResult]:
     """Evaluate named violation frames; report violating rows on failure
-    (the `dbt test --store-failures` behavior)."""
-    results = []
-    for name, viol in checks.items():
-        rows = viol.limit(sample_rows + 1).collect()
-        if not rows:
-            results.append(CheckResult(name, True, 0))
-        else:
-            # the sample already proves the exact count unless it
-            # overflowed — only then re-run the plan for the total
-            n = len(rows) if len(rows) <= sample_rows else viol.count()
-            results.append(CheckResult(name, False, n, [r.asDict() for r in rows[:sample_rows]]))
-    return results
+    (the `dbt test --store-failures` behavior). The checks run as
+    concurrent Spark jobs; results are in the order of ``checks``."""
+    if not checks:
+        return []
+    spark = next(iter(checks.values())).sparkSession
+    return run_concurrently(
+        spark, lambda item: _check(*item, sample_rows), checks.items()
+    )

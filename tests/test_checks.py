@@ -40,6 +40,26 @@ def test_run_checks_reports_samples(spark):
     assert results[0].n_violations == 1
     assert results[0].sample[0]["value"] == 1
 
+    # several checks run together: results keep input order and each
+    # carries the exact count, through the count() path on overflow
+    ids = spark.createDataFrame([(i,) for i in range(10)] + [(None,)] * 8, "id: int")
+    results = checks.run_checks(
+        {
+            "many_nulls": checks.not_null(ids, "id"),  # 8 > sample_rows
+            "passes": checks.unique(ids, "id"),
+            "few_out_of_range": checks.accepted_range(ids, "id", 0, 7),  # 2 rows
+            "no_rows_at_all": checks.accepted_values(ids, "id", []).limit(0),
+        },
+        sample_rows=3,
+    )
+    got = [(r.name, r.passed, r.n_violations, r.sample) for r in results]
+    assert got[0] == ("many_nulls", False, 8, [{"id": None}] * 3)
+    assert got[1] == ("passes", True, 0, [])
+    assert got[2][:3] == ("few_out_of_range", False, 2)
+    assert sorted(row["id"] for row in got[2][3]) == [8, 9]
+    assert got[3] == ("no_rows_at_all", True, 0, [])
+    assert checks.run_checks({}) == []
+
 
 # ------------------------------------------------- dbt-utils-style checks
 def test_accepted_range(spark):

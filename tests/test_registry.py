@@ -346,11 +346,27 @@ def test_registration_guards_fail_loudly(spark):
         )(lambda ctx: None)
 
 
+def _run_with_timeout(project, spark, seconds=120):
+    """project.run(spark) from a fresh thread, failing instead of hanging
+    if a concurrent build deadlocks."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    pool = ThreadPoolExecutor(max_workers=1)
+    try:
+        return pool.submit(project.run, spark).result(timeout=seconds)
+    finally:
+        pool.shutdown(wait=False)
+
+
 def test_lazy_ref_does_not_double_materialize(spark, tmp_path):
     """A model built via ctx.ref() during run() must not be
-    re-materialized when the loop reaches it — for incremental models a
-    second build would write a spurious extra version."""
-    from jaffle_shop_classic_spark.plans.registry import ModelContext, Project
+    re-materialized when the run reaches it — for incremental models a
+    second build would write a spurious extra version. The consumers and
+    the model share one DAG level, so the run's own build and every
+    consumer's ref() race for it."""
+    import sys
+
+    from jaffle_shop_classic_spark.plans.registry import Project
 
     p = Project(warehouse_dir=str(tmp_path))
     builds = {"n": 0}
@@ -360,14 +376,100 @@ def test_lazy_ref_does_not_double_materialize(spark, tmp_path):
         builds["n"] += 1
         return ctx.spark.createDataFrame([(1, "x")], "id long, v string")
 
-    # registered with NO declared edge: `a` discovers b only via ref()
-    @p.model(name="a_consumer")
-    def a_consumer(ctx):
+    # registered with NO declared edge: consumers discover b only via
+    # ref(); more consumers than cores, so threads interleave
+    def consumer(ctx):
         return ctx.ref("inc_b").select("id")
 
-    p.run(spark)
-    assert builds["n"] == 1  # one build regardless of topo position
+    names = [f"consumer_{i}" for i in range(8)]
+    for name in names:
+        p.model(name=name)(consumer)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        built = _run_with_timeout(p, spark)
+    finally:
+        sys.setswitchinterval(interval)
+    assert builds["n"] == 1  # one build regardless of which thread wins
     assert p._versions("inc_b") == [1]  # exactly one version written
+    assert all(built[n].collect() == [(1,)] for n in names)
+
+
+def test_undeclared_ref_cycle_fails_instead_of_hanging(spark):
+    """Models that ref() each other without declaring it: a build that
+    would wait on its own thread raises CycleError, whether the cycle
+    closes in one thread or across a level's concurrent builds."""
+    from jaffle_shop_classic_spark.plans.registry import Project
+
+    for third_thread in (False, True):
+        p = Project()
+
+        @p.model(name="x")
+        def x(ctx):
+            return ctx.ref("y")
+
+        @p.model(name="y")
+        def y(ctx):
+            return ctx.ref("x")
+
+        if third_thread:  # z reaches x through ref() as well
+            @p.model(name="z")
+            def z(ctx):
+                return ctx.ref("x")
+
+        with pytest.raises(graphlib.CycleError, match="ref\\(\\) cycle"):
+            _run_with_timeout(p, spark)
+
+
+def test_run_fails_fast_and_keeps_job_attribution(spark, tmp_path):
+    """A model raising in level k propagates out of run() and no level
+    k+1 model is built; jobs the level's concurrent builds launch land in
+    the caller's job group, with no tag-inheritance warning."""
+    import uuid
+    import warnings
+
+    from jaffle_shop_classic_spark.plans.registry import Project
+
+    p = Project(warehouse_dir=str(tmp_path))
+    built = []
+
+    @p.model(name="ok_a", materialized="table")
+    def ok_a(ctx):
+        built.append("ok_a")
+        return ctx.spark.range(5)
+
+    @p.model(name="ok_b", materialized="table")
+    def ok_b(ctx):
+        built.append("ok_b")
+        return ctx.spark.range(7)
+
+    @p.model(name="boom")
+    def boom(ctx):
+        raise RuntimeError("model boom failed")
+
+    @p.model(name="downstream", deps=("ok_a",))
+    def downstream(ctx):
+        built.append("downstream")
+        return ctx.ref("ok_a")
+
+    sc = spark.sparkContext
+    group = f"registry-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "attribution test")
+    try:
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            with pytest.raises(RuntimeError, match="model boom failed"):
+                p.run(spark)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert sorted(built) == ["ok_a", "ok_b"]  # level 0 finished, level 1 never ran
+    assert "downstream" not in p._built
+    # the two table writes ran in pool threads, inside the caller's group
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 2
+    assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
 
 
 def test_snapshot_duplicate_key_fails_loudly(spark, tmp_path):
@@ -388,3 +490,30 @@ def test_snapshot_duplicate_key_fails_loudly(spark, tmp_path):
     with pytest.raises(ValueError, match="duplicate"):
         p.run(spark)
     assert p._versions("snap_dup") == []  # nothing persisted
+
+
+def test_snapshot_preflight_reports_duplicates_before_the_clock(spark, tmp_path):
+    """The duplicate-key and high-water probes run together; duplicate
+    keys are reported even when the clock is also stale, and a stale
+    clock alone trips the monotonic-clock guard."""
+    from jaffle_shop_classic_spark.plans.registry import Project
+
+    p = Project(warehouse_dir=str(tmp_path))
+    rows = {"v": [(1, "a"), (2, "b")]}
+
+    @p.model(name="snap_pf", materialized="snapshot", unique_key=("id",))
+    def snap_pf(ctx):
+        return ctx.spark.createDataFrame(rows["v"], "id long, status string")
+
+    p.snapshot_at = 5
+    p.run(spark)
+    rows["v"] = [(1, "a"), (1, "b")]
+    with pytest.raises(ValueError, match="duplicate"):
+        p.run(spark)  # clock 5 is stale too: duplicates win
+    rows["v"] = [(1, "c"), (2, "b")]
+    with pytest.raises(ValueError, match="must exceed the stored high-water mark 5"):
+        p.run(spark)
+    assert p._versions("snap_pf") == [1]
+    p.snapshot_at = 6
+    p.run(spark)
+    assert p._versions("snap_pf") == [1, 2]
