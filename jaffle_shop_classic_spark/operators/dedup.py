@@ -23,6 +23,8 @@ the plan shape is unchanged.
 
 from __future__ import annotations
 
+from collections.abc import Callable, Sequence
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -749,6 +751,67 @@ def _symmetric_edges(pairs: DataFrame) -> DataFrame:
     )
 
 
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    probe: Sequence[Column],
+    *,
+    max_rounds: int,
+    name: str,
+) -> tuple[DataFrame, int]:
+    """The one run-to-convergence loop: apply ``step`` until the
+    one-row ``state.agg(*probe)`` tuple stops moving.
+
+    Each round's state is lazily localCheckpoint-ed and the probe is the
+    action that materializes it, so a round costs one job and lineage is
+    cut every round (at 100 TB the checkpoint becomes durable). The probe
+    also runs once on the initial state; checkpoint that state first if
+    it is expensive to recompute. The probe must be monotone under
+    ``step`` (labels only decrease, edges are only deleted, the reached
+    set only grows) so an unchanged tuple IS the fixpoint. Returns
+    (converged state, rounds run including the confirming one); raises
+    rather than hand back a non-fixpoint once ``max_rounds`` is spent."""
+    prev = tuple(state.agg(*probe).first())
+    for rounds in range(1, max_rounds + 1):
+        state = step(state).localCheckpoint(eager=False)
+        cur = tuple(state.agg(*probe).first())
+        if cur == prev:
+            return state, rounds
+        prev = cur
+    raise RuntimeError(f"{name} did not converge in {max_rounds} rounds")
+
+
+def min_label_components(edges: DataFrame, key: str, max_rounds: int) -> DataFrame:
+    """Hash-min connected components over a symmetric (src, dst) edge
+    list: DataFrame[key, label], label = min node id of the component.
+    Each round joins labels to the edges and keeps min(neighbor label,
+    own label); the sum of labels only ever decreases, so it is the
+    convergence probe. Rounds needed = graph diameter — for chain-shaped
+    graphs use star_components (O(log n) rounds)."""
+    # fused init + round 1: label(u) = min(u, min(N(u))) is exactly what
+    # propagating identity labels once produces, but costs ONE aggregate
+    # over the symmetric edges instead of distinct + join + union + agg
+    # (every node appears as src, so no node list is needed)
+    labels = (
+        edges.groupBy(F.col("src").alias(key))
+        .agg(F.min("dst").alias("mn"))
+        .select(key, F.least(F.col(key), F.col("mn")).alias("label"))
+        .localCheckpoint(eager=False)
+    )
+
+    def propagate(labels: DataFrame) -> DataFrame:
+        prop = edges.join(labels, edges.src == labels[key]).select(
+            F.col("dst").alias(key), "label"
+        )
+        return labels.unionByName(prop).groupBy(key).agg(F.min("label").alias("label"))
+
+    labels, _ = fixpoint(
+        labels, propagate, [F.sum("label")],
+        max_rounds=max_rounds, name="min_label_components",
+    )
+    return labels
+
+
 # Both CC variants compute the same fixpoint (component_id = min doc_id
 # reachable over the LSH candidate graph), so they share one oracle;
 # the CTE prefix is reused by dedup_keep_best_representative.
@@ -796,9 +859,9 @@ _CC_ORACLE = f"""{_CC_CTES}
     "component_id = min doc_id of its component (the canonical keeper) "
     "plus the component size. Spark side is iterative hash-min label "
     "propagation: each round joins labels to the symmetric edge list "
-    "and takes min(neighbor label, own label); convergence is detected "
-    "by the monotone sum-of-labels fixpoint, and each round is "
-    "localCheckpoint-ed to truncate lineage. Rounds needed = graph "
+    "and takes min(neighbor label, own label) (min_label_components on "
+    "the shared fixpoint kernel: a monotone sum-of-labels probe, one "
+    "lazily localCheckpoint-ed job per round). Rounds needed = graph "
     "diameter (near-dup components are shallow; typically <=3). For "
     "high-diameter graphs use the sibling "
     "dedup_cluster_components_star (large-star/small-star, O(log n) "
@@ -808,42 +871,7 @@ _CC_ORACLE = f"""{_CC_CTES}
 )
 def q_dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _symmetric_edges(_lsh_candidate_pairs(spark, sf_dir))
-    # fused init + round 1: label(u) = min(u, min(N(u))) is exactly what
-    # propagating identity labels once produces, but costs ONE aggregate
-    # over the symmetric edges instead of distinct + join + union + agg
-    # (every node appears as src, so no node list is needed)
-    # lazy checkpoints: the sum probe right after is the materializing
-    # action, so each round costs ONE job instead of two (checkpoint +
-    # probe); lineage is still truncated once materialized
-    labels = (
-        edges.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.min("dst").alias("mn"))
-        .select("doc_id", F.least(F.col("doc_id"), F.col("mn")).alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    for _ in range(MAX_CC_ITERS):
-        prop = edges.join(labels, edges.src == labels.doc_id).select(
-            F.col("dst").alias("doc_id"), "label"
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("doc_id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:  # labels only ever decrease -> fixpoint
-            break
-        prev_sum = new_sum
-    else:
-        # Silently returning non-converged labels would diverge from the
-        # recursive-CTE oracle fixpoint with no error signal.
-        raise RuntimeError(
-            f"connected components did not converge in {MAX_CC_ITERS} "
-            "iterations — graph diameter exceeds the cap; raise "
-            "MAX_CC_ITERS or switch to large-star/small-star rounds"
-        )
+    labels = min_label_components(edges, "doc_id", MAX_CC_ITERS)
     comp = labels.select("doc_id", F.col("label").alias("component_id"))
     sizes = comp.groupBy("component_id").agg(F.count(F.lit(1)).alias("n_members"))
     return comp.join(sizes, "component_id").select(
@@ -877,17 +905,10 @@ def star_components(pairs: DataFrame, max_iters: int = STAR_MAX_ITERS) -> DataFr
     canon = (
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
-    def _sig(e: DataFrame):
-        r = e.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("src").alias("s"), F.sum("dst").alias("d")
-        ).first()
-        return (r["n"], r["s"], r["d"])
-
-    prev = _sig(canon)
-    for _ in range(max_iters):
+    def alternate(canon: DataFrame) -> DataFrame:
         adj = canon.unionByName(
             canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
@@ -914,22 +935,19 @@ def star_components(pairs: DataFrame, max_iters: int = STAR_MAX_ITERS) -> DataFr
         )
         smaller = adj2.filter(F.col("dst") < F.col("src"))
         m2 = smaller.groupBy("src").agg(F.min("dst").alias("m"))
-        canon = (
+        return (
             smaller.join(m2, "src")
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
             .unionByName(m2.select("src", F.col("m").alias("dst")))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        cur = _sig(canon)
-        if cur == prev:  # star fixpoint: every edge is (node, component min)
-            break
-        prev = cur
-    else:
-        raise RuntimeError(
-            f"star CC did not converge in {max_iters} alternations"
-        )
+
+    # star fixpoint: every edge is (node, component min)
+    canon, _ = fixpoint(
+        canon, alternate, [F.count(F.lit(1)), F.sum("src"), F.sum("dst")],
+        max_rounds=max_iters, name="star_components",
+    )
     comp = canon.select(F.col("src").alias("doc_id"), F.col("dst").alias("component_id"))
     roots = canon.select(F.col("dst").alias("doc_id")).distinct().select(
         "doc_id", F.col("doc_id").alias("component_id")
@@ -1964,10 +1982,10 @@ KCORE_K = 2
 KCORE_ROUNDS = 4
 
 
-def _kcore_oracle() -> str:
+def _kcore_oracle(depth: int) -> str:
     rounds = []
     prev_e = "edges"
-    for t in range(1, KCORE_ROUNDS + 1):
+    for t in range(1, depth + 1):
         rounds.append(f"""
     d{t} AS MATERIALIZED (SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
              FROM {prev_e} GROUP BY src),
@@ -1993,7 +2011,7 @@ def _kcore_oracle() -> str:
     ),
     {','.join(rounds)}
     SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{KCORE_ROUNDS}
+    FROM e{depth}
     GROUP BY src
     ORDER BY core_deg DESC, doc_id ASC
     """
@@ -2001,7 +2019,7 @@ def _kcore_oracle() -> str:
 
 @register(
     "graph_kcore_peel",
-    oracle=_kcore_oracle(),
+    oracle=_kcore_oracle(KCORE_ROUNDS),
     doc=f"k-core decomposition ({KCORE_ROUNDS} synchronous peeling "
     f"rounds at k={KCORE_K}) on the MinHash-LSH similarity graph — the "
     "fourth graph analytic next to components / PageRank / LPA: "
@@ -2031,6 +2049,20 @@ def q_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _peel_round(e: DataFrame, k: int) -> DataFrame:
+    """One synchronous peel: drop every edge with an endpoint whose
+    current degree is below k."""
+    keep = (
+        e.groupBy("src")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .where(F.col("deg") >= k)
+        .select(F.col("src").alias("keep_id"))
+    )
+    return e.join(keep, e["src"] == keep["keep_id"], "left_semi").join(
+        keep, e["dst"] == keep["keep_id"], "left_semi"
+    )
+
+
 def kcore_peel(
     edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS
 ) -> DataFrame:
@@ -2039,114 +2071,47 @@ def kcore_peel(
     shape."""
     e = edges
     for _ in range(rounds):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("keep_id"))
-        )
-        e = (
-            e.join(keep, e["src"] == keep["keep_id"], "left_semi")
-            .join(keep, e["dst"] == keep["keep_id"], "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        e = _peel_round(e, k).localCheckpoint(eager=False)
     return e
 
 
-KCORE_FIXPOINT_MAX_ROUNDS = 64
 # oracle unroll depth: rounds past convergence are no-ops at the
 # fixpoint, so the unrolled oracle equals the true k-core whenever the
-# graph converges within this many rounds — tests/test_dedup.py asserts
-# convergence well inside it at sf0.001, and the run-to-convergence loop
-# raises rather than return a non-fixpoint if the cap is ever hit
+# graph converges within this many changing rounds; kcore_fixpoint's
+# default cap (one more round, to confirm) accepts exactly those graphs
 KCORE_FIXPOINT_ORACLE_ROUNDS = 8
 
 
 def kcore_fixpoint(
-    edges: DataFrame, k: int = KCORE_K, max_rounds: int = KCORE_FIXPOINT_MAX_ROUNDS
+    edges: DataFrame, k: int = KCORE_K,
+    max_rounds: int = KCORE_FIXPOINT_ORACLE_ROUNDS + 1,
 ) -> tuple[DataFrame, int]:
-    """Run-to-convergence k-core on a symmetric edge list: loop the
-    certified peel round body until an edge-count probe stops moving.
-    The probe is sound because peeling only ever DELETES edges — an
-    unchanged count means no node fell below k, i.e. the fixpoint.
-    Each round ends in a lazy localCheckpoint whose materializing
-    action IS the probe (one job per round, lineage truncated every
-    round — the CC pattern at dedup.py:775); at 100 TB swap in durable
-    checkpoints. Returns (converged edges, rounds executed)."""
-    e = edges
-    prev = e.count()
-    for rounds_run in range(1, max_rounds + 1):
-        keep = (
-            e.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .where(F.col("deg") >= k)
-            .select(F.col("src").alias("keep_id"))
-        )
-        e = (
-            e.join(keep, e["src"] == keep["keep_id"], "left_semi")
-            .join(keep, e["dst"] == keep["keep_id"], "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        n = e.count()
-        if n == prev:
-            return e, rounds_run
-        prev = n
-    raise RuntimeError(
-        f"k-core did not converge in {max_rounds} rounds — raise "
-        "KCORE_FIXPOINT_MAX_ROUNDS (each round strictly shrinks the "
-        "edge set, so the node count bounds the rounds needed)"
+    """Run-to-convergence k-core on a symmetric edge list: the fixpoint
+    kernel loops the certified peel round until an edge-count probe stops
+    moving. The probe is sound because peeling only ever DELETES edges —
+    an unchanged count means no node fell below k. Returns (converged
+    edges, rounds executed)."""
+    return fixpoint(
+        edges, lambda e: _peel_round(e, k), [F.count(F.lit(1))],
+        max_rounds=max_rounds, name="kcore_fixpoint",
     )
-
-
-def _kcore_fixpoint_oracle() -> str:
-    rounds = []
-    prev_e = "edges"
-    for t in range(1, KCORE_FIXPOINT_ORACLE_ROUNDS + 1):
-        rounds.append(f"""
-    d{t} AS MATERIALIZED (SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
-             FROM {prev_e} GROUP BY src),
-    k{t} AS MATERIALIZED (SELECT doc_id FROM d{t} WHERE deg >= {KCORE_K}),
-    e{t} AS MATERIALIZED (
-      SELECT e.src, e.dst FROM {prev_e} e
-      JOIN k{t} a ON a.doc_id = e.src
-      JOIN k{t} b ON b.doc_id = e.dst
-    )""")
-        prev_e = f"e{t}"
-    return f"""
-    WITH {_SIGS_CTE},
-    bands AS (SELECT doc_id, unnest({_BANDS_SQL}) AS band_key FROM sigs),
-    pairs AS (
-      SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b
-      FROM bands x JOIN bands y
-        ON x.band_key = y.band_key AND x.doc_id < y.doc_id
-    ),
-    edges AS MATERIALIZED (
-      SELECT doc_a AS src, doc_b AS dst FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    {','.join(rounds)}
-    SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS core_deg
-    FROM e{KCORE_FIXPOINT_ORACLE_ROUNDS}
-    GROUP BY src
-    ORDER BY core_deg DESC, doc_id ASC
-    """
 
 
 @register(
     "graph_kcore_fixpoint",
-    oracle=_kcore_fixpoint_oracle(),
+    oracle=_kcore_oracle(KCORE_FIXPOINT_ORACLE_ROUNDS),
     doc=f"The RUN-TO-CONVERGENCE twin of graph_kcore_peel (k={KCORE_K}): "
     "a user asking for 'the k-core' gets the true fixpoint, not a "
     "bounded-round approximation — the loop peels until an edge-count "
     "probe stops moving (sound because peeling only deletes edges; an "
-    "unchanged count means no node fell below k), raising rather than "
-    "returning silently if the round cap is ever hit. The DuckDB twin "
+    "unchanged count means no node fell below k). The DuckDB twin "
     f"unrolls {KCORE_FIXPOINT_ORACLE_ROUNDS} rounds as CTEs: rounds "
     "past convergence are no-ops at the fixpoint, so the unrolled form "
     "EQUALS the true k-core whenever convergence lands inside the "
-    "unroll depth — asserted by pytest at sf0.001 with margin, the "
-    "same empirical-depth trick dedup_cluster_components' recursive "
+    "unroll depth; the fixpoint kernel's cap is that depth + 1 "
+    "confirming round, so a deeper graph raises instead of surfacing "
+    "as a bare hash mismatch — convergence asserted by pytest at "
+    "sf0.001 with margin, the same empirical-depth trick dedup_cluster_components' recursive "
     "closure avoids needing. Per-round Spark shape is the certified "
     "peel body (keyed degree aggregate with map-side combine + two "
     "left-semi endpoint joins), one job per round with the lazy "
@@ -2155,20 +2120,7 @@ def _kcore_fixpoint_oracle() -> str:
     "localCheckpoint swaps for durable checkpoints.",
 )
 def q_graph_kcore_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e, rounds_run = kcore_fixpoint(
-        _symmetric_edges(_lsh_candidate_pairs(spark, sf_dir))
-    )
-    # oracle-coupling guard (at EVERY SF, not just the sf0.001 pytest):
-    # convergence at round r means r-1 rounds actually changed the edge
-    # set; the unrolled oracle equals the true k-core only when that
-    # depth fits inside its unroll. Raise the diagnosable error rather
-    # than let a deeper graph surface as a bare parity hash mismatch.
-    if rounds_run - 1 > KCORE_FIXPOINT_ORACLE_ROUNDS:
-        raise RuntimeError(
-            f"k-core needed {rounds_run - 1} changing rounds but the DuckDB "
-            f"oracle unrolls only {KCORE_FIXPOINT_ORACLE_ROUNDS} — raise "
-            "KCORE_FIXPOINT_ORACLE_ROUNDS to keep parity sound"
-        )
+    e, _ = kcore_fixpoint(_symmetric_edges(_lsh_candidate_pairs(spark, sf_dir)))
     return (
         e.groupBy(F.col("src").alias("doc_id"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("core_deg"))

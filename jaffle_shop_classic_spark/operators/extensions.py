@@ -4410,6 +4410,7 @@ guards in the LSH path. Mirrored verbatim in the DuckDB oracle, so the
 cap is part of the certified semantics, not a Spark-side shortcut; at
 the normal data's block-size distribution (~2-25 distinct names/block
 across sf0.001-sf1) it never binds."""
+ER_MAX_ROUNDS = 8  # min-label rounds; near-dup entity graphs are shallow
 
 
 @register(
@@ -4474,13 +4475,16 @@ across sf0.001-sf1) it never binds."""
     "names is excluded from the fuzzy quadratic (exact-dup clustering "
     "still applies), mirrored in the oracle — the planted degenerate- "
     "block pytest proves pair generation stays bounded under an "
-    "adversarial key. Clustering is the same monotone-fixpoint loop as "
-    "CC (near-dup entity graphs are shallow), lazily localCheckpoint-ed "
-    "per round — at 100 TB the checkpoints become durable and hot "
-    "blocks salt exactly like any skewed equi-join key. Oracle is the "
+    "adversarial key. Clustering is CC's min_label_components on the "
+    "shared fixpoint kernel (near-dup entity graphs are shallow), lazily "
+    "localCheckpoint-ed per round — at 100 TB the checkpoints become "
+    "durable and hot blocks salt exactly like any skewed equi-join "
+    "key. Oracle is the "
     "identical fixpoint as a recursive min-label closure.",
 )
 def q_entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .dedup import min_label_components  # runtime import keeps registration order
+
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand")
     # Exact-dup collapse BEFORE the fuzzy quadratic (the standard MDM
     # trick): levenshtein only ever sees DISTINCT (brand, name) pairs,
@@ -4536,41 +4540,10 @@ def q_entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cross.unionByName(
         cross.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)
-    labels = (
-        edges.groupBy(F.col("src").alias("rep"))
-        .agg(F.min("dst").alias("mn"))
-        .select("rep", F.least(F.col("rep"), F.col("mn")).alias("label"))
-        .localCheckpoint(eager=False)
-    )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    converged = prev_sum is None  # no fuzzy edges at all -> trivially done
-    for _ in range(8):
-        if converged:
-            break
-        prop = edges.join(labels, edges.src == labels.rep).select(
-            F.col("dst").alias("rep"), "label"
-        )
-        labels = (
-            labels.unionByName(prop)
-            .groupBy("rep")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        new_sum = labels.agg(F.sum("label")).first()[0]
-        if new_sum == prev_sum:  # labels only decrease -> fixpoint
-            converged = True
-            break
-        prev_sum = new_sum
-    if not converged:
-        # fail LOUDLY rather than ship partial clusters: a match
-        # component deeper than 8 hops would silently diverge from the
-        # oracle's full transitive closure (same contract as the CC
-        # loop's divergence guard)
-        raise RuntimeError(
-            "entity_resolution_clusters: min-label propagation did not "
-            "reach a fixpoint within 8 rounds — raise the round budget "
-            "or switch to the star-contraction path for this graph"
-        )
+    # fails LOUDLY rather than ship partial clusters: a match component
+    # deeper than ER_MAX_ROUNDS hops would silently diverge from the
+    # oracle's full transitive closure
+    labels = min_label_components(edges, "rep", ER_MAX_ROUNDS)
     # exact-duplicate groups (|ks| >= 2) with no fuzzy neighbor are
     # their own component; singleton names with no match emit no row
     dup_only = (

@@ -1493,8 +1493,8 @@ def q_decay_weighted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shape as PageRank (sum-times) and hash-min components (min-"
     "min); all arithmetic is BIGINT, so convergence is engine-"
     "portable. Fixed depth keeps it one Catalyst plan; unbounded "
-    "diameters switch to the checkpointed loop + monotone-sum "
-    "convergence guard of dedup_cluster_components.",
+    "diameters switch to graph_minplus_fixpoint, the same round on the "
+    "shared fixpoint kernel (dedup.fixpoint).",
 )
 def q_graph_minplus_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = _copurchase_pairs(spark, sf_dir, KHOP_MIN_SUPPORT).select(
@@ -3840,7 +3840,9 @@ def q_eval_f1_per_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MINPLUS_FIXPOINT_MAX_ROUNDS = 64
+# oracle unroll depth; minplus_fixpoint's default cap is one more
+# (confirming) round, so it accepts exactly the graphs the unrolled
+# oracle computes the true fixpoint for
 MINPLUS_FIXPOINT_ORACLE_ROUNDS = 10
 
 
@@ -3890,9 +3892,11 @@ def _minplus_fixpoint_oracle() -> str:
     "edges impossible here — weights are 101-min(support,100) >= 1). "
     f"The DuckDB twin unrolls {MINPLUS_FIXPOINT_ORACLE_ROUNDS} "
     "MATERIALIZED rounds (rounds past convergence are idempotent at "
-    "the fixpoint; pytest asserts convergence well inside the unroll "
-    "at sf0.001; materialization stops DuckDB's CTE inlining from "
-    "exponentiating the round tree — the k-core lesson). Per-round "
+    "the fixpoint; the fixpoint kernel's cap is the unroll + 1 "
+    "confirming round, so a deeper graph raises instead of failing "
+    "parity with a bare hash mismatch; pytest asserts convergence well "
+    "inside the unroll at sf0.001; materialization stops DuckDB's CTE "
+    "inlining from exponentiating the round tree — the k-core lesson). Per-round "
     "Spark shape: broadcast frontier join + min aggregate (the "
     "min-plus semiring on the Pregel exchange shape), lazy "
     "localCheckpoint materialized by the probe, O(1) driver state. "
@@ -3908,52 +3912,39 @@ def q_graph_minplus_fixpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = p.select(
         F.col("pa").alias("s"), F.col("pb").alias("t"), "w"
     ).unionAll(p.select(F.col("pb").alias("s"), F.col("pa").alias("t"), "w"))
-    e = e.localCheckpoint(eager=False)
-    cur = e.agg(F.min("s").alias("node")).select(
-        "node", F.lit(0).cast("bigint").alias("dist")
+    cur = minplus_fixpoint(e.localCheckpoint(eager=False))
+    return cur.select("node", F.col("dist").cast("bigint").alias("dist")).orderBy(
+        F.col("dist").asc(), F.col("node").asc()
     )
-    prev_probe = (1, 0)
-    changed_rounds = 0
-    for _ in range(MINPLUS_FIXPOINT_MAX_ROUNDS):
+
+
+def minplus_fixpoint(
+    e: DataFrame, max_rounds: int = MINPLUS_FIXPOINT_ORACLE_ROUNDS + 1
+) -> DataFrame:
+    """Single-source shortest paths from min(s) over a weighted (s, t, w)
+    edge list by Bellman-Ford relaxation to convergence on the fixpoint
+    kernel: DataFrame[node, dist]. The (reached-count, distance-sum)
+    probe is strictly monotone until the fixpoint because the reached
+    set only grows and every distance only decreases (weights >= 1)."""
+    from .dedup import fixpoint  # runtime import keeps registration order
+
+    def relax(cur: DataFrame) -> DataFrame:
         relaxed = (
             e.join(cur.hint("broadcast"), e["s"] == cur["node"])
             .select(F.col("t").alias("node"), (cur["dist"] + e["w"]).alias("dist"))
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        cur = (
-            relaxed.unionAll(cur)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
-        )
-        row = cur.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dist").alias("s")
-        ).first()
-        probe = (row["n"], row["s"])
-        if probe == prev_probe:
-            # oracle-coupling guard: the DuckDB twin unrolls a FIXED
-            # number of rounds, so a graph whose shortest-path depth
-            # exceeds the unroll would put the oracle at a non-fixpoint
-            # and fail parity with a bare hash mismatch. Raise the
-            # diagnosable error instead, at EVERY SF this runs at.
-            if changed_rounds > MINPLUS_FIXPOINT_ORACLE_ROUNDS:
-                raise RuntimeError(
-                    f"min-plus converged in {changed_rounds} rounds but the "
-                    f"DuckDB oracle unrolls only "
-                    f"{MINPLUS_FIXPOINT_ORACLE_ROUNDS} — raise "
-                    "MINPLUS_FIXPOINT_ORACLE_ROUNDS to keep parity sound"
-                )
-            return cur.select(
-                "node", F.col("dist").cast("bigint").alias("dist")
-            ).orderBy(F.col("dist").asc(), F.col("node").asc())
-        prev_probe = probe
-        changed_rounds += 1
-    raise RuntimeError(
-        f"min-plus did not converge in {MINPLUS_FIXPOINT_MAX_ROUNDS} rounds — "
-        "raise MINPLUS_FIXPOINT_MAX_ROUNDS (positive weights guarantee "
-        "convergence within the node count)"
+        return relaxed.unionAll(cur).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    seed = e.agg(F.min("s").alias("node")).select(
+        "node", F.lit(0).cast("bigint").alias("dist")
     )
+    cur, _ = fixpoint(
+        seed, relax, [F.count(F.lit(1)), F.sum("dist")],
+        max_rounds=max_rounds, name="minplus_fixpoint",
+    )
+    return cur
 
 
 KMV_K = 256
@@ -6089,7 +6080,7 @@ def q_ab_randomization_test(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(sum(CAST(x AS HUGEINT) * y) AS DOUBLE) AS sxy
       FROM stacked
     )
-    SELECT m2 / 2 AS n_edges,
+    SELECT m2 // 2 AS n_edges,
            round((sxy - CAST(sx AS DOUBLE) * sx / m2)
                  / (sxx - CAST(sx AS DOUBLE) * sx / m2), 6) + 0
              AS assortativity
@@ -6160,10 +6151,13 @@ def q_graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return mom.select(
         (F.col("m2") / 2).cast("bigint").alias("n_edges"),
-        F.round(
-            (F.col("sxy") - F.col("sx").cast("double") * F.col("sx") / F.col("m2"))
-            / (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / F.col("m2")),
-            6,
+        (
+            F.round(
+                (F.col("sxy") - F.col("sx").cast("double") * F.col("sx") / F.col("m2"))
+                / (F.col("sxx") - F.col("sx").cast("double") * F.col("sx") / F.col("m2")),
+                6,
+            )
+            + F.lit(0)
         ).alias("assortativity"),
     )
 

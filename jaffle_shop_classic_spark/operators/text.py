@@ -1788,7 +1788,7 @@ def q_quality_lr_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same way): state is O(model), gradients are one partial->final
     # aggregate per step, nothing corpus-sized ever leaves the
     # executors. The 1-row collect per iteration is the same class as
-    # the connected-components convergence probe (dedup.py). The
+    # the fixpoint kernel's convergence probe (dedup.fixpoint). The
     # rounding stays INSIDE the Spark expression, so the update
     # arithmetic is bit-identical to the oracle's CTE chain; driver
     # transport of the already-rounded doubles is exact.

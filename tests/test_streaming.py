@@ -841,7 +841,7 @@ def test_stream_pending_generation_requires_matching_checkpoint(spark, tmp_path)
 
 def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     """r16: streaming state-partition count derives from the source file
-    size (one partition per SPARK_GRAFT_STREAM_PART_BYTES, floor 2, cap
+    size (one partition per SPARK_GRAFT_STREAM_PART_BYTES, floor 8, cap
     SPARK_GRAFT_STREAM_MAX_PARTS) — decoupled from the core-count-
     coupled session default — and the session's shuffle-partition conf
     is restored after the drain."""
@@ -878,4 +878,49 @@ def test_stream_state_parts_derivation_and_restore(spark, sf_dir, monkeypatch):
     )
     assert out.count() > 0
     # the drain pinned the derived count only for its own lifetime
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_stream_state_parts_sizes_the_named_source(spark, sf_dir, monkeypatch):
+    """The partition count derives from the table the query streams:
+    stream_neardup_dedup sizes off documents, not events."""
+    import os
+
+    from jaffle_shop_classic_spark.streaming import windows
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_MIN_PARTS", "1")
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_PART_BYTES", "1024")
+    want = {
+        src: -(-os.path.getsize(os.path.join(sf_dir, f"{src}.parquet")) // 1024)
+        for src in ("events", "documents")
+    }
+    assert want["events"] != want["documents"]  # the sizes tell them apart
+    for src, n in want.items():
+        assert windows._stream_state_parts(sf_dir, src) == n
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_MIN_PARTS")
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_PART_BYTES")
+
+    seen = []
+    sizer = windows._stream_state_parts
+    monkeypatch.setattr(
+        windows, "_stream_state_parts",
+        lambda d, source="events": seen.append(source) or sizer(d, source),
+    )
+    load_catalog()["stream_neardup_dedup"].fn(spark, sf_dir).count()
+    assert seen == ["documents"]
+
+
+def test_failed_drain_start_restores_shuffle_partitions(spark, sf_dir):
+    """A drain whose .start() raises (complete mode without a streaming
+    aggregation is rejected at start) must not leak its pinned
+    state-partition count into later queries."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(AnalysisException, match="(?i)complete"):
+        run_stream_to_batch(
+            stream_events(spark, sf_dir), "stream_start_fails", "complete",
+            state_parts=int(before) + 3,
+        )
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
